@@ -3,7 +3,9 @@ bronze fetch → silver conformance → gold rollups, plus sink idempotency."""
 
 from __future__ import annotations
 
+import functools
 import os
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -18,6 +20,31 @@ VCOS = ["vco0", "vco1"]
 
 def _factory():
     return FakeVcoTransport(n_enterprises=3, n_edges=4)
+
+
+class _LoggedTransport(FakeVcoTransport):
+    """Appends one ``method vco enterpriseId`` line per call to a file, which
+    the local-mode Python workers and the test share. With ``drift`` the
+    n-th ``getEnterpriseEdges`` call for an enterprise serves n % 5
+    CONNECTED edges, so every re-fetch sees a different fleet."""
+
+    def __init__(self, log_path: str, drift: bool = False):
+        super().__init__(n_enterprises=3, n_edges=4)
+        self.log_path = log_path
+        self.drift = drift
+
+    def __call__(self, method: str, params: dict) -> object:
+        ep = params.get("endpoint", {})
+        line = f"{method} {ep.get('vco')} {ep.get('enterpriseId')}"
+        with open(self.log_path, "a+") as log:
+            log.seek(0)
+            n = 1 + log.read().splitlines().count(line)
+            log.write(line + "\n")
+        out = super().__call__(method, params)
+        if self.drift and method == "enterprise/getEnterpriseEdges":
+            for i, edge in enumerate(out):
+                edge["edgeState"] = "CONNECTED" if i < n % 5 else "OFFLINE"
+        return out
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -65,6 +92,68 @@ def test_pipeline_idempotent_rerun(spark, tmp_path):
         for t in ["edge", "links", "events", "customer"]
     }
     assert first == second
+
+
+def test_run_pipeline_creates_missing_out_dir(spark, tmp_path):
+    out_dir = tmp_path / "not" / "yet" / "there"
+    run_pipeline(spark, VCOS, _factory, out_dir=str(out_dir))
+    for t in ["edge", "links", "events", "customer"]:
+        assert (out_dir / t).is_dir()
+
+
+def test_run_pipeline_releases_its_cache(spark, tmp_path):
+    """Each run caches its enterprises; a long-lived session must not keep
+    one cached relation per run after the sinks are done with it."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.cachedData().size()
+    for _ in range(2):
+        run_pipeline(spark, VCOS, _factory, out_dir=str(tmp_path))
+    assert cache_manager.cachedData().size() == before
+
+
+def test_edges_fetched_once_per_enterprise_per_run(spark, tmp_path):
+    """The edge, links and customer targets all derive from the edge
+    fetch; each enterprise's edges are requested once per run, as the
+    reference does, not once per target."""
+    log = tmp_path / "calls.log"
+    factory = functools.partial(_LoggedTransport, str(log))
+    for runs in (1, 2):
+        run_pipeline(spark, VCOS, factory, out_dir=str(tmp_path / "out"))
+        calls = Counter(
+            line
+            for line in log.read_text().splitlines()
+            if line.startswith("enterprise/getEnterpriseEdges ")
+        )
+        assert calls == {
+            f"enterprise/getEnterpriseEdges {v} {e}": runs
+            for v in VCOS
+            for e in range(3)
+        }
+
+
+def test_targets_share_one_edge_snapshot(spark, tmp_path):
+    """Each customer's connected-edge count matches the CONNECTED rows of
+    the edge target even when the API answers differently on every call.
+    One VCO: the fake transport repeats edge keys across VCOs."""
+    factory = functools.partial(
+        _LoggedTransport, str(tmp_path / "calls.log"), drift=True
+    )
+    out_dir = tmp_path / "out"
+    run_pipeline(spark, ["vco0"], factory, out_dir=str(out_dir))
+    edges = spark.read.parquet(str(out_dir / "edge"))
+    connected = {
+        (r["vco"], r["enterprise_id"]): r["count"]
+        for r in edges.filter(F.col("edge_state") == "CONNECTED")
+        .groupBy("vco", "enterprise_id")
+        .count()
+        .collect()
+    }
+    customers = {
+        (r["vco"], r["enterprise_id"]): r["n_connected_edges"]
+        for r in spark.read.parquet(str(out_dir / "customer")).collect()
+    }
+    assert len(customers) == 3
+    assert customers == {k: connected.get(k, 0) for k in customers}
 
 
 def test_projection_and_interval_pushdown():

@@ -13,6 +13,16 @@ per-statement MySQL commits become one idempotent upsert per output table
 (sinks.upsert). Bronze fetch parallelism is the Spark scheduler (T6), with
 request pushdown in the source adapter (S3/S4).
 
+Fetch once per tick: with an ``out_dir``, the parsed bronze edges land in
+``out_dir/bronze_edges`` before any silver or gold table is built, and the
+edge, links and customer targets all read that parquet copy. Each
+enterprise's ``getEnterpriseEdges`` is therefore called exactly once per
+run, as in the reference (``powerbi_main_fun.py:180-194``), and the three
+targets come from one API snapshot. The landed table is overwritten on every
+run through the sinks' staging-dir swap, so a failed fetch leaves the
+previous tick's copy whole. Without an ``out_dir`` there are no sinks and
+the returned plans stay lazy: nothing runs until the caller acts on them.
+
 At scale: bronze fan-out is one task per (vco, enterprise); silver transforms
 are shuffle-free per-edge projections plus one explode; gold is a single
 groupBy on customer — the whole pipeline has exactly two wide dependencies
@@ -29,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.sanitize import valid_name
-from ..sinks.upsert import insert_ignore_parquet, upsert_parquet
+from ..sinks.upsert import _atomic_overwrite, insert_ignore_parquet, upsert_parquet
 from ..sources.api import (
     Transport,
     build_params,
@@ -153,8 +163,14 @@ def bronze_enterprises(
 
 
 def bronze_edges(
-    spark: SparkSession, enterprises: DataFrame, transport_factory
+    spark: SparkSession,
+    enterprises: DataFrame,
+    transport_factory,
+    land_path: str | None = None,
 ) -> DataFrame:
+    """One exploded edge per row. With ``land_path`` the fetch runs here,
+    once: its output is written there (staging dir + swap) and the result
+    is a scan of that copy, so every consumer reads the same snapshot."""
     # one fetch task per (vco, enterprise) — the reference's nested loops
     # become a partitioned endpoint COLUMN (T6): the discovered fleet flows
     # straight from the bronze enterprises DataFrame into the fetch stage,
@@ -172,13 +188,17 @@ def bronze_edges(
         eps, "enterprise/getEnterpriseEdges", params, transport_factory,
         max_parallelism=32,
     )
-    return raw.select(
+    edges = raw.select(
         F.get_json_object("endpoint", "$.vco").alias("vco"),
         F.get_json_object("endpoint", "$.enterpriseId").cast("long").alias(
             "enterprise_id"
         ),
         F.explode(F.from_json("payload", EDGE_SCHEMA)).alias("edge"),
     )
+    if land_path is None:
+        return edges
+    _atomic_overwrite(spark, edges, land_path)
+    return spark.read.parquet(land_path)
 
 
 def bronze_events(
@@ -323,10 +343,19 @@ def run_pipeline(
     out_dir: str | None = None,
     interval_ms: tuple[int, int] = (1704067200000, 1706745600000),
 ) -> PipelineOutput:
-    """Execute bronze → silver → gold; optionally upsert to parquet tables."""
+    """Execute bronze → silver → gold; optionally upsert to parquet tables.
+
+    With ``out_dir`` (created if missing) the bronze edges land there first
+    and the four targets are upserted; otherwise nothing runs and the
+    returned DataFrames are lazy plans.
+    """
+    land_path = None
+    if out_dir:
+        os.makedirs(out_dir, exist_ok=True)
+        land_path = os.path.join(out_dir, "bronze_edges")
     enterprises = bronze_enterprises(spark, vcos, transport_factory)
     enterprises.cache()  # reused by edges, events, and the gold join
-    b_edges = bronze_edges(spark, enterprises, transport_factory)
+    b_edges = bronze_edges(spark, enterprises, transport_factory, land_path)
     b_events = bronze_events(spark, enterprises, transport_factory, interval_ms)
 
     s_edges = silver_edges(b_edges)
@@ -349,4 +378,7 @@ def run_pipeline(
             os.path.join(out_dir, "customer"),
             ["vco", "enterprise_id"],
         )
+        # the sinks were the cache's last readers; a long-lived session
+        # would otherwise keep one cached relation per run
+        enterprises.unpersist()
     return PipelineOutput(enterprises, s_edges, s_links, s_events, g_customers)
